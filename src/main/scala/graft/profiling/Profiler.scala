@@ -1,6 +1,6 @@
 package graft.profiling
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StringType}
 
@@ -80,13 +80,5 @@ object Profiler {
     val fact = df.join(dim, dimCols, "left")
       .drop(dimCols: _*)
     (dim, fact)
-  }
-
-  def profileDf(spark: SparkSession, df: DataFrame): DataFrame = {
-    import spark.implicits._
-    val profs = profile(df)
-    profs.map(p => (p.name, p.dtype, p.rows, p.distinct, p.nulls,
-      classify(df, p))).toDF(
-      "coluna", "tipo", "linhas", "distintos", "nulos", "classe")
   }
 }

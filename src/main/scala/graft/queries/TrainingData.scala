@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Store, Tables}
 import graft.functions.VectorExpressions.cosineSim
 import graft.text.TextFunctions._
 
@@ -494,51 +494,14 @@ object TrainingData {
 
   val x13AnnIvf: Q = (s, d) => ivfTopK(s, d, lloydIters = 2)
 
-  /** X31: the persisted-IVF QUERY path — the production side of the
-    * build-once/query-many split that the fused x13 (train + probe,
-    * timed together every run) can't show. The first call per sf-dir
-    * builds and [[graft.ml.IvfIndex.save]]s the on-disk inverted file
-    * (cells partitioned by `cell`); every later call — including every
-    * timed bench pass, since the warm pass pays the build — only loads
-    * it and probes, opening none but the probed cells' files via
-    * dynamic partition pruning (plan-asserted in MlSpec). Same
-    * determinism contract as x13 (shared [[ivfOracle]]); queries are
-    * vec_id 5..9 so the two entries' results stay distinguishable. */
-  /** Build-and-save the x13-shaped IVF index once per sf-dir (first
-    * caller pays; everyone after — x31's probes, x35's cells — reads
-    * the materialized inverted file from disk). Returns the path. */
-  /** name:size:mtime fingerprint of a fixture table's data files —
-    * embedded in materialization cache paths so a changed fixture
-    * abandons the stale artifact and rebuilds instead of silently
-    * reusing it (which would surface only as a confusing oracle
-    * mismatch). */
-  private def fixtureFp(d: String, table: String): String = {
-    import scala.jdk.CollectionConverters._
-    val src = java.nio.file.Paths.get(d, s"$table.parquet")
-    val files =
-      if (java.nio.file.Files.isDirectory(src)) {
-        val st = java.nio.file.Files.walk(src)
-        try st.iterator().asScala.filter(
-          java.nio.file.Files.isRegularFile(_)).toVector
-        finally st.close()
-      } else Vector(src)
-    val sig = files.map(p => s"${p.getFileName}:" +
-        s"${java.nio.file.Files.size(p)}:" +
-        s"${java.nio.file.Files.getLastModifiedTime(p).toMillis}")
-      .sorted.mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-  }
-
-  /** Build every persisted cache a first caller would otherwise pay
-    * inside a timed query — the IVF index (x13/x31/x35b/x75), the
-    * MinHash signature store (x60), and the curated staging table
-    * (x32b). [[graft.Bench]] calls this from its UNTIMED warmup so no
-    * timed pass can conflate build cost with query cost (round-7
-    * verdict item 1: the official artifact stamped x60 at 10.98 s vs
-    * a 0.90 s receipt). Idempotent — each ensure* re-checks its
-    * _SUCCESS marker, so a pre-built cache costs one stat call. */
+  /** Build every persisted store a first caller would otherwise pay
+    * for inside a timed query — all 14 `ensure*` stores below.
+    * [[graft.Bench]] calls this from its UNTIMED warmup so no timed
+    * pass can conflate build cost with query cost (round-7 verdict
+    * item 1: the official artifact stamped x60 at 10.98 s vs a 0.90 s
+    * receipt). Idempotent — [[graft.core.Store.ensure]] finds a
+    * complete store by its key with one stat call, so only stores
+    * whose key changed (or that were never built) pay a build. */
   def prebuildCaches(s: SparkSession, d: String): Unit = {
     ensureIvfIndex(s, d); ensureSigStore(s, d); ensureCuratedStaged(s, d)
     ensureDHashStore(s, d); ensureDedupLabels(s, d); ensureIvfPqStore(s, d)
@@ -557,24 +520,18 @@ object TrainingData {
     * compute path) and every downstream analytic reads the stored
     * (doc_id, fps) rows. First caller pays;
     * [[prebuildCaches]] pays it in Bench's untimed warmup. */
-  private def ensureWinnowStore(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    // "winnow2": schema v2 — the store also carries each doc's k-gram
-    // count and selected-position count (ingest-time stats, computed
-    // for free during fingerprinting), so x126's corpus-wide audit
-    // reads the staged table instead of re-scanning text (round-9
-    // verdict item 3). New prefix forces a one-time rebuild over any
-    // v1 cache on disk.
-    val path = s"target/winnow2_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/_SUCCESS")))
+  private def ensureWinnowStore(s: SparkSession, d: String): String =
+    // version 2: the store also carries each doc's k-gram count and
+    // selected-position count (ingest-time stats, computed for free
+    // during fingerprinting), so x126's corpus-wide audit reads the
+    // staged table instead of re-scanning text (round-9 verdict item 3)
+    Store.ensure(d, "winnow", 2, Seq("documents")) { dir =>
       graft.dedup.NearDup.winnowedFingerprints(
           spread(s, Tables.documents(s, d).select(col("doc_id"), col("text"))))
         .select(col("doc_id"), col("m"),
           size(col("sel")).cast("long").as("n_sel"), col("fps"))
-        .write.mode("overwrite").parquet(path)
-    path
-  }
+        .write.parquet(dir)
+    }
 
   /** The persisted model registry for x108's trained quality
     * classifier: 68 (bucket, weight) rows, trained once per fixture
@@ -582,21 +539,18 @@ object TrainingData {
     * calibration audit) — the x98 staged-read contract applied to
     * MODEL artifacts instead of labels. Production pipelines never
     * retrain a filter model per query; they score against the
-    * registry copy. First caller pays the 20 GD jobs;
+    * registry copy. The weights are the last snapshot of the stored
+    * training trajectory ([[ensureClfTrajectory]]), so the 20 GD jobs
+    * run once for both stores; keyed on the trajectory's path, the
+    * registry rebuilds whenever the trajectory does.
     * [[prebuildCaches]] pays it in Bench's untimed warmup. */
   private[graft] def ensureClfWeights(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/clfw_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/_SUCCESS"))) {
-      val (tf, n) = qualityClfTf(s, d)
-      val w = trainQualityClf(tf, n)
-      s.createDataFrame(
-          w.toSeq.zipWithIndex.map { case (v, b) => (b.toLong, v) })
-        .toDF("bucket", "wb")
-        .coalesce(1).write.mode("overwrite").parquet(path)
+    val traj = ensureClfTrajectory(s, d)
+    Store.ensure(d, "clfw", 1, Nil, traj) { dir =>
+      s.read.parquet(traj).filter(col("step") === clfIters)
+        .select(col("bucket"), col("wb"))
+        .coalesce(1).write.parquet(dir)
     }
-    path
   }
 
   /** σ(z/T) quantized 1e-6 after evaluation, for a 1e9-quantized
@@ -615,21 +569,6 @@ object TrainingData {
     pmod(conv(substring(md5(id.cast("string")), 1, 4), 16, 10)
       .cast("long"), lit(100L))
 
-  /** The persisted temperature for x108's classifier (x136): the
-    * 1-parameter post-hoc calibration (Guo et al. 2017) fitted on
-    * x36's VAL split by a quantized NLL grid scan — T ∈ {0.25 …
-    * 4.00} step 0.05, each candidate scored by the 1e-6-quantized
-    * negative log-likelihood of the 1e-6-quantized σ(z/T) (both
-    * transcendentals quantized after evaluation, so the scan is an
-    * integer argmin both engines replay bit-for-bit; ties take the
-    * smaller T). T = 1 sits on the grid, so the fitted NLL can never
-    * exceed the uncalibrated one — the acceptance floor EngineSpec
-    * pins. Stored beside the weight registry ([[ensureClfWeights]])
-    * because serving needs BOTH numbers: production scores with
-    * σ(z/T*), never refits per query. Scale: one val-split scoring
-    * scan × a 76-row broadcast grid collapsing onto 76 rows — the
-    * x111 bounded-grid shape. First caller pays; [[prebuildCaches]]
-    * pays it in Bench's untimed warmup. */
   /** The full (tq, snll) temperature grid on x36's val split — the
     * scan [[ensureClfTemp]] argmins over, exposed whole so EngineSpec
     * can pin the floor (T = 1 is on the grid) without re-deriving
@@ -650,16 +589,28 @@ object TrainingData {
       .groupBy(col("tq")).agg(sum(col("nq")).as("snll"))
   }
 
-  private[graft] def ensureClfTemp(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/clft_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/_SUCCESS")))
+  /** The persisted temperature for x108's classifier (x136): the
+    * 1-parameter post-hoc calibration (Guo et al. 2017) fitted on
+    * x36's VAL split by a quantized NLL grid scan — T ∈ {0.25 …
+    * 4.00} step 0.05, each candidate scored by the 1e-6-quantized
+    * negative log-likelihood of the 1e-6-quantized σ(z/T) (both
+    * transcendentals quantized after evaluation, so the scan is an
+    * integer argmin both engines replay bit-for-bit; ties take the
+    * smaller T). T = 1 sits on the grid, so the fitted NLL can never
+    * exceed the uncalibrated one — the acceptance floor EngineSpec
+    * pins. Stored beside the weight registry ([[ensureClfWeights]])
+    * because serving needs BOTH numbers: production scores with
+    * σ(z/T*), never refits per query. Scale: one val-split scoring
+    * scan × a 76-row broadcast grid collapsing onto 76 rows — the
+    * x111 bounded-grid shape. First caller pays; [[prebuildCaches]]
+    * pays it in Bench's untimed warmup. */
+  private[graft] def ensureClfTemp(s: SparkSession, d: String): String =
+    Store.ensure(d, "clft", 1, Seq("documents"),
+        ensureClfWeights(s, d)) { dir =>
       clfTempGrid(s, d)
         .orderBy(col("snll"), col("tq")).limit(1)
-        .coalesce(1).write.mode("overwrite").parquet(path)
-    path
-  }
+        .coalesce(1).write.parquet(dir)
+    }
 
   /** The OPQ-rotated serving store (x114): [[graft.ml.Opq]]'s
     * parametric rotation applied to the corpus, then EXACTLY the
@@ -669,44 +620,20 @@ object TrainingData {
     * incoming queries with the SAME matrix the corpus was coded
     * under). This is the composition Ge et al. describe as the
     * production layout: OPQ is a drop-in pre-rotation for IVF-PQ. */
-  private[graft] def ensureOpqPqStore(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/opqpq_${tag}_${fixtureFp(d, "embeddings")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/codes/_SUCCESS"))) {
+  private[graft] def ensureOpqPqStore(s: SparkSession, d: String): String =
+    Store.ensure(d, "opqpq", 1, Seq("embeddings")) { dir =>
       val (mat, _, _) = graft.ml.Opq.covariance(Tables.embeddings(s, d))
       val rows = graft.ml.Opq.rotationRows(
         graft.ml.Opq.eigensolve(mat, mat.length), m = 8, dsub = 8)
-      val emb = spread(s, Tables.embeddings(s, d))
+      saveIvfPq(spread(s, Tables.embeddings(s, d))
         .select(col("vec_id"),
           graft.ml.Opq.rotateCol(col("embedding"), rows).as("embedding"))
-        .localCheckpoint()
-      val coarse = graft.ml.PqIndex.trainCodebook(emb, m = 1, dsub = 64)
-      val assigned = graft.ml.PqIndex.assign(
-        graft.ml.PqIndex.subvectors(emb, 1, 64), coarse)
-      val resEmb = assigned.as("a").join(broadcast(coarse.as("c")),
-          col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
-        .select(col("a.vec_id").as("vec_id"), col("a.cell").as("cell"),
-          zip_with(col("a.sub"), col("c.ce"),
-            (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-            .as("embedding"))
-        .localCheckpoint()
-      val pqCents = graft.ml.PqIndex.trainCodebook(
-        resEmb.select(col("vec_id"), col("embedding")))
-      val codes = graft.ml.PqIndex.encode(
-        resEmb.select(col("vec_id"), col("embedding")), pqCents)
+        .localCheckpoint(), dir)
       s.createDataFrame(rows.toSeq.zipWithIndex.map { case (u, o) =>
           (o.toLong + 1L, u.toSeq) })
         .toDF("o", "u")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/rot")
-      coarse.coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-      pqCents.coalesce(1).write.mode("overwrite").parquet(s"$path/pqcents")
-      codes.write.mode("overwrite").parquet(s"$path/codes")
-      resEmb.select(col("vec_id"), col("cell")).write.mode("overwrite")
-        .parquet(s"$path/cells")
+        .coalesce(1).write.parquet(s"$dir/rot")
     }
-    path
-  }
 
   /** Stage the synthetic failure-mode fixtures that rounds ≤8 planted
     * INLINE in three carriers (the round-8 verdict's cleanup note):
@@ -720,29 +647,26 @@ object TrainingData {
     * re-proven bit-identical on every correctness run. Prebuilt
     * untimed ([[prebuildCaches]]); keyed by the fixture
     * fingerprints. */
-  private[graft] def ensurePlantedFixtures(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/planted_${tag}_" +
-      s"${fixtureFp(d, "documents")}_${fixtureFp(d, "embeddings")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/docs_paginated/_SUCCESS"))) {
+  private[graft] def ensurePlantedFixtures(s: SparkSession, d: String): String =
+    Store.ensure(d, "planted", 1,
+        Seq("documents", "embeddings")) { dir =>
       val docs = Tables.documents(s, d)
       val base = wsTokens(col("text"))
       docs.select(col("doc_id"),
           when(col("doc_id") % 3 === 0 && size(base) >= 8,
             concat(array_join(slice(base, 1, 8), " "), lit(" "), col("text")))
             .otherwise(col("text")).as("text"))
-        .write.mode("overwrite").parquet(s"$path/docs_intradup")
+        .write.parquet(s"$dir/docs_intradup")
       docs.filter(col("doc_id") >= 50).select(col("doc_id"), col("text"))
         .unionByName(docs.filter(col("doc_id") < 50)
           .select((col("doc_id") + 6000000L).as("doc_id"),
             concat(upper(col("text")), lit(" , .")).as("text")))
-        .write.mode("overwrite").parquet(s"$path/docs_canon_train")
+        .write.parquet(s"$dir/docs_canon_train")
       Tables.embeddings(s, d)
         .filter(pmod(graft.dedup.NearDup.md5Hash32(
           col("vec_id").cast("string")), lit(10L)) =!= 7)
         .select(col("vec_id"))
-        .write.mode("overwrite").parquet(s"$path/vecs_holed")
+        .write.parquet(s"$dir/vecs_holed")
       // x128's paired-feature table: every dedup-corpus doc (base +
       // exact copy + near copy, for base ids that HAVE an embedding)
       // with the md5 checksum of its paired vector's 1e6-rounded
@@ -765,7 +689,7 @@ object TrainingData {
             .otherwise(col("s0")).as("vfp")))
         .unionByName(baseV.select((col("vec_id") + 2000000L).as("doc_id"),
           col("s0").as("vfp")))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/vecs_paired")
+        .coalesce(1).write.parquet(s"$dir/vecs_paired")
       // x132's paginated corpus: every 5th long doc is split the way
       // a crawled article splits across pages — part 1 = tokens 1-16,
       // part 2 = tokens 9-n (pages share the 8-token overlap a
@@ -779,45 +703,44 @@ object TrainingData {
         .unionByName(docs.filter(longSplit).select(
           (col("doc_id") + 4000000L).as("doc_id"),
           array_join(slice(base, lit(9), size(base) - 8), " ").as("text")))
-        .write.mode("overwrite").parquet(s"$path/docs_paginated")
+        .write.parquet(s"$dir/docs_paginated")
     }
-    path
+
+  /** Build-and-save the x13-shaped IVF index once per sf-dir (first
+    * caller pays; everyone after — x31's probes, x35's cells — reads
+    * the materialized inverted file from disk). Returns the path;
+    * `emb` is read only when the store is built. */
+  private def ivfStore(s: SparkSession, d: String, name: String,
+      emb: => DataFrame): String = {
+    val nCells = 16; val lloydIters = 2
+    Store.ensure(d, name, 1, Seq("embeddings"),
+        nCells, lloydIters) { dir =>
+      graft.ml.IvfIndex.save(
+        graft.ml.IvfIndex.build(spread(s, emb), nCells, lloydIters), dir)
+    }
   }
+
+  private def ensureIvfIndex(s: SparkSession, d: String): String =
+    ivfStore(s, d, "ivf_index", Tables.embeddings(s, d))
 
   /** The PRE-BATCH serving index for x109's incremental-maintenance
     * audit: an IVF index trained and built on the base corpus only
     * (vec_id % 10 ≠ 7 — the batch vectors provably never influenced
     * the quantizer), persisted like [[ensureIvfIndex]]. */
-  private def ensureIvfBaseStore(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path =
-      s"target/ivf_base_${tag}_c16i2_${fixtureFp(d, "embeddings")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/cells/_SUCCESS")))
-      graft.ml.IvfIndex.save(
-        graft.ml.IvfIndex.build(
-          spread(s, Tables.embeddings(s, d).filter(col("vec_id") % 10 =!= 7)),
-          nCells = 16, lloydIters = 2),
-        path)
-    path
-  }
+  private def ensureIvfBaseStore(s: SparkSession, d: String): String =
+    ivfStore(s, d, "ivf_base",
+      Tables.embeddings(s, d).filter(col("vec_id") % 10 =!= 7))
 
-  private def ensureIvfIndex(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    // The cache path embeds the build parameters AND the fixture
-    // fingerprint ([[fixtureFp]]).
-    val nCells = 16; val lloydIters = 2
-    val path =
-      s"target/ivf_index_${tag}_c${nCells}i${lloydIters}_${fixtureFp(d, "embeddings")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/cells/_SUCCESS")))
-      graft.ml.IvfIndex.save(
-        graft.ml.IvfIndex.build(
-          spread(s, Tables.embeddings(s, d)), nCells = nCells, lloydIters),
-        path)
-    path
-  }
-
+  /** X31: the persisted-IVF QUERY path — the production side of the
+    * build-once/query-many split that the fused x13 (train + probe,
+    * timed together every run) can't show. The first call per sf-dir
+    * builds and [[graft.ml.IvfIndex.save]]s the on-disk inverted file
+    * (cells partitioned by `cell`); every later call — including every
+    * timed bench pass, since the warm pass pays the build — only loads
+    * it and probes, opening none but the probed cells' files via
+    * dynamic partition pruning (plan-asserted in MlSpec). Same
+    * determinism contract as x13 (shared [[ivfOracle]]); queries are
+    * vec_id 5..9 so the two entries' results stay distinguishable. */
   val x31IvfQuery: Q = (s, d) =>
     graft.ml.IvfIndex.query(
       graft.ml.IvfIndex.loadCached(s, ensureIvfIndex(s, d)),
@@ -1342,16 +1265,12 @@ object TrainingData {
     * text by every downstream consumer. minQuality=0 keeps every doc
     * (calibration wants the full distribution; the threshold comes
     * AFTER calibration). */
-  private def ensureCuratedStaged(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/curated_staged_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/_SUCCESS")))
+  private def ensureCuratedStaged(s: SparkSession, d: String): String =
+    Store.ensure(d, "curated_staged", 1, Seq("documents")) { dir =>
       graft.streaming.DocStream.curate(
         Tables.documents(s, d), minQuality = 0.0, stopwords)
-        .write.mode("overwrite").parquet(path)
-    path
-  }
+        .write.parquet(dir)
+    }
 
   /** X32b: the single-corpus-scan variant of [[x32QualityCalibration]]
     * — the documented 100 TB path made real. Quality is read from the
@@ -2401,18 +2320,15 @@ object TrainingData {
     * (ADVICE r6). */
   private val sigStoreParams = (16, 4, 3) // (numHashes, bandRows, shingleN)
   private def ensureSigStore(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
     val (k, b, sh) = sigStoreParams
-    val path =
-      s"target/sig_store_${tag}_k${k}b${b}s${sh}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/bands/_SUCCESS")))
+    Store.ensure(d, "sig_store", 1, Seq("documents"),
+        k, b, sh) { dir =>
       graft.dedup.NearDup.saveSignatureStore(
         spread(s, Tables.documents(s, d)
           .filter(col("doc_id") % 1000000 < 200)
-          .select(col("doc_id"), col("text"))), path,
+          .select(col("doc_id"), col("text"))), dir,
         numHashes = k, bandRows = b, shingleN = sh)
-    path
+    }
   }
 
   /** X60: incremental near-dup against a persisted signature store —
@@ -2707,18 +2623,14 @@ object TrainingData {
     * [[ensureSigStore]] cache contract: fixture fingerprint in the
     * path, first caller pays, [[prebuildCaches]] pays it in Bench's
     * untimed warmup). Covers the BASE assets (doc_id < 200 slice). */
-  private def ensureDHashStore(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/dhash_store_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/bands/_SUCCESS")))
+  private def ensureDHashStore(s: SparkSession, d: String): String =
+    Store.ensure(d, "dhash_store", 1, Seq("documents")) { dir =>
       graft.multimodal.Multimodal.saveDHashStore(s,
         graft.multimodal.Multimodal.withBinaryPayload(
           spread(s, Tables.documents(s, d)
             .filter(col("doc_id") % 1000000 < 200)
-            .select(col("doc_id"), col("text")))), path)
-    path
-  }
+            .select(col("doc_id"), col("text")))), dir)
+    }
 
   /** X92: incremental image near-dup against the persisted dHash
     * store — the image twin of x60's signature-store probe and the
@@ -2790,18 +2702,14 @@ object TrainingData {
     * soft weights, graph stats, leakage audits) joins the labels
     * table instead of re-running shingles → pairs → closure.
     * [[prebuildCaches]] pays it in Bench's untimed warmup. */
-  private def ensureDedupLabels(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/dedup_labels_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/_SUCCESS")))
+  private def ensureDedupLabels(s: SparkSession, d: String): String =
+    Store.ensure(d, "dedup_labels", 1, Seq("documents")) { dir =>
       graft.dedup.NearDup.clusters(
         corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200),
         ngramJaccardPairs(s, d))
         .select(col("doc_id"), col("canonico"))
-        .write.mode("overwrite").parquet(path)
-    path
-  }
+        .write.parquet(dir)
+    }
 
   /** X98: staged dedup-label read path — the x32/x32b split for the
     * dedup family: x14 is the compute-the-closure carrier (the cost
@@ -3069,35 +2977,36 @@ object TrainingData {
     * Training cost is measured where it belongs: x13 (coarse Lloyd)
     * and x99 (PQ Lloyd). The oracle retrains everything from scratch,
     * proving the store is bit-identical to a fresh build. */
-  private[graft] def ensureIvfPqStore(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/ivfpq_${tag}_${fixtureFp(d, "embeddings")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/codes/_SUCCESS"))) {
-      val emb = spread(s, Tables.embeddings(s, d))
-      val coarse = graft.ml.PqIndex.trainCodebook(emb, m = 1, dsub = 64)
-      val assigned = graft.ml.PqIndex.assign(
-        graft.ml.PqIndex.subvectors(emb, 1, 64), coarse)
-      // residuals are corpus-scaled and feed train, encode, AND the
-      // cell map — checkpoint once, cluster-side
-      val resEmb = assigned.as("a").join(broadcast(coarse.as("c")),
-          col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
-        .select(col("a.vec_id").as("vec_id"), col("a.cell").as("cell"),
-          zip_with(col("a.sub"), col("c.ce"),
-            (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-            .as("embedding"))
-        .localCheckpoint()
-      val pqCents = graft.ml.PqIndex.trainCodebook(
-        resEmb.select(col("vec_id"), col("embedding")))
-      val codes = graft.ml.PqIndex.encode(
-        resEmb.select(col("vec_id"), col("embedding")), pqCents)
-      coarse.coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-      pqCents.coalesce(1).write.mode("overwrite").parquet(s"$path/pqcents")
-      codes.write.mode("overwrite").parquet(s"$path/codes")
-      resEmb.select(col("vec_id"), col("cell")).write.mode("overwrite")
-        .parquet(s"$path/cells")
+  private[graft] def ensureIvfPqStore(s: SparkSession, d: String): String =
+    Store.ensure(d, "ivfpq", 1, Seq("embeddings")) { dir =>
+      saveIvfPq(spread(s, Tables.embeddings(s, d)), dir)
     }
-    path
+
+  /** The IVF-PQ build behind every IVF-PQ store ([[ensureIvfPqStore]],
+    * [[ensureIvfPqBase]], [[ensureOpqPqStore]]): the 16-cell coarse
+    * quantizer, the residual 8×16 product codebook, the residual codes
+    * and the (vec_id, cell) map of `emb`, written under `dir`. */
+  private def saveIvfPq(emb: DataFrame, dir: String): Unit = {
+    val coarse = graft.ml.PqIndex.trainCodebook(emb, m = 1, dsub = 64)
+    val assigned = graft.ml.PqIndex.assign(
+      graft.ml.PqIndex.subvectors(emb, 1, 64), coarse)
+    // residuals are corpus-scaled and feed train, encode, AND the
+    // cell map — checkpoint once, cluster-side
+    val resEmb = assigned.as("a").join(broadcast(coarse.as("c")),
+        col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
+      .select(col("a.vec_id").as("vec_id"), col("a.cell").as("cell"),
+        zip_with(col("a.sub"), col("c.ce"),
+          (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
+          .as("embedding"))
+      .localCheckpoint()
+    val pqCents = graft.ml.PqIndex.trainCodebook(
+      resEmb.select(col("vec_id"), col("embedding")))
+    graft.ml.PqIndex.encode(
+        resEmb.select(col("vec_id"), col("embedding")), pqCents)
+      .write.parquet(s"$dir/codes")
+    coarse.coalesce(1).write.parquet(s"$dir/coarse")
+    pqCents.coalesce(1).write.parquet(s"$dir/pqcents")
+    resEmb.select(col("vec_id"), col("cell")).write.parquet(s"$dir/cells")
   }
 
   /** x110's BASE-ONLY twin of [[ensureIvfPqStore]] (round-10 verdict
@@ -3105,38 +3014,17 @@ object TrainingData {
     * coarse quantizer, residual PQ codebooks, codes — but trained and
     * encoded on the base slice ONLY (vec_id % 10 ≠ 7), x109's
     * held-out pattern, so the x110 drift audit measures the batch
-    * against a quantizer that provably never saw it. Seeds follow
+    * against a quantizer that provably never saw it (the same
+    * [[saveIvfPq]] build on the filtered relation). Seeds follow
     * [[graft.ml.PqIndex.trainCodebook]]'s vec_id < 16 rule on the
     * BASE relation (id 7 is batch → 15 coarse cells; the oracle
     * mirrors the same seed set). The full-corpus store stays what
     * x100/x129 serve from; this store exists for the audit. */
-  private[graft] def ensureIvfPqBase(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/ivfpqbase_${tag}_${fixtureFp(d, "embeddings")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/codes/_SUCCESS"))) {
-      val emb = spread(s, Tables.embeddings(s, d)
-        .filter(col("vec_id") % 10 =!= 7))
-      val coarse = graft.ml.PqIndex.trainCodebook(emb, m = 1, dsub = 64)
-      val assigned = graft.ml.PqIndex.assign(
-        graft.ml.PqIndex.subvectors(emb, 1, 64), coarse)
-      val resEmb = assigned.as("a").join(broadcast(coarse.as("c")),
-          col("a.m") === col("c.m") && col("a.cell") === col("c.cid"))
-        .select(col("a.vec_id").as("vec_id"), col("a.cell").as("cell"),
-          zip_with(col("a.sub"), col("c.ce"),
-            (x, y) => (x.cast("double") - y.cast("double")).cast("float"))
-            .as("embedding"))
-        .localCheckpoint()
-      val pqCents = graft.ml.PqIndex.trainCodebook(
-        resEmb.select(col("vec_id"), col("embedding")))
-      val codes = graft.ml.PqIndex.encode(
-        resEmb.select(col("vec_id"), col("embedding")), pqCents)
-      coarse.coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-      pqCents.coalesce(1).write.mode("overwrite").parquet(s"$path/pqcents")
-      codes.write.mode("overwrite").parquet(s"$path/codes")
+  private[graft] def ensureIvfPqBase(s: SparkSession, d: String): String =
+    Store.ensure(d, "ivfpqbase", 1, Seq("embeddings")) { dir =>
+      saveIvfPq(spread(s, Tables.embeddings(s, d)
+        .filter(col("vec_id") % 10 =!= 7)), dir)
     }
-    path
-  }
 
   /** x100/x129's shared ADC scoring stage over the persisted IVF-PQ
     * store: (qid, nid, dist_q) for every code vector in the query's
@@ -8286,8 +8174,15 @@ object TrainingData {
     * transcendental-quantization rule); the weight update is one
     * identical double chain on those integers, so driver and the
     * oracle's unrolled per-iteration SQL agree exactly. */
+  // the trainer's defaults; also part of [[ensureClfTrajectory]]'s
+  // store key, so changing one rebuilds every stored classifier
+  private final val clfDFeat = 68
+  private final val clfIters = 20
+  private final val clfEta = 16.0
+
   private[graft] def trainQualityClf(tf: DataFrame, n: Long,
-      dFeat: Int = 68, iters: Int = 20, eta: Double = 16.0): Array[Double] =
+      dFeat: Int = clfDFeat, iters: Int = clfIters,
+      eta: Double = clfEta): Array[Double] =
     trainQualityClfSteps(tf, n, dFeat, iters, eta).last
 
   /** [[trainQualityClf]] with the full per-step weight TRAJECTORY
@@ -8324,8 +8219,8 @@ object TrainingData {
     }
 
   private[graft] def trainQualityClfSteps(tf: DataFrame, n: Long,
-      dFeat: Int = 68, iters: Int = 20,
-      eta: Double = 16.0): Seq[Array[Double]] = {
+      dFeat: Int = clfDFeat, iters: Int = clfIters,
+      eta: Double = clfEta): Seq[Array[Double]] = {
     val out = Seq.newBuilder[Array[Double]]
     // ONE job per GD step (r12, guide §1.2/§2.4): the gradient is an
     // order-free per-dim BIGINT sum, so each step rides a single RDD
@@ -8373,11 +8268,9 @@ object TrainingData {
     * wb) beside the final-weight registry — built once per fixture
     * like [[ensureClfWeights]] (the same trainer run, all snapshots
     * kept). */
-  private[graft] def ensureClfTrajectory(s: SparkSession, d: String): String = {
-    val tag = d.replaceAll("[^A-Za-z0-9.]", "_")
-    val path = s"target/clftraj_${tag}_${fixtureFp(d, "documents")}"
-    if (!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$path/_SUCCESS"))) {
+  private[graft] def ensureClfTrajectory(s: SparkSession, d: String): String =
+    Store.ensure(d, "clftraj", 1, Seq("documents"),
+        clfDFeat, clfIters, clfEta) { dir =>
       val (tf, n) = qualityClfTf(s, d)
       val steps = trainQualityClfSteps(tf, n)
       s.createDataFrame(steps.zipWithIndex.flatMap { case (w, i) =>
@@ -8385,10 +8278,8 @@ object TrainingData {
             ((i + 1).toLong, b.toLong, v) }
         }.toSeq)
         .toDF("step", "bucket", "wb")
-        .coalesce(1).write.mode("overwrite").parquet(path)
+        .coalesce(1).write.parquet(dir)
     }
-    path
-  }
 
   /** X108: quality-classifier training — the model-based filter step
     * real curation pipelines run where this engine so far only had

@@ -44,11 +44,6 @@ object TextFunctions {
   def shinglesOfToks(toks: Column, n: Int): Column =
     array_distinct(allShinglesOfToks(toks, n))
 
-  /** Word n-grams WITHOUT dedup from raw text (convenience; prefer
-    * [[allShinglesOfToks]] over a projected array in hot paths). */
-  def allShingles(text: Column, n: Int): Column =
-    allShinglesOfToks(wsTokens(text), n)
-
   /** Word n-gram shingles (n consecutive tokens joined by space). */
   def shingles(text: Column, n: Int): Column = {
     val toks = wsTokens(text)
@@ -70,11 +65,6 @@ object TextFunctions {
   def punctRatio(text: Column): Column =
     (length(text) - length(regexp_replace(text, "[^A-Za-z0-9\\s]", "")))
       .cast("double") / greatest(length(text), lit(1))
-
-  /** Mean token length. */
-  def meanTokenLen(text: Column): Column =
-    length(regexp_replace(trim(text), "\\s+", "")).cast("double") /
-      greatest(tokenCount(text), lit(1))
 
   /** Composite quality score ∈ [0,1]: length band + low punctuation +
     * stopword presence (the reference's quality gates are ad-hoc

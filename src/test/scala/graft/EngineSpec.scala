@@ -2853,7 +2853,8 @@ class EngineSpec extends AnyFunSuite {
 
   test("x157 cartography: trajectory snapshots replay; regions partition the corpus") {
     // the persisted trajectory is exactly the trainer's snapshots —
-    // step 20 must equal the serving registry bit-for-bit
+    // step 20 must equal an independent training run bit-for-bit, and
+    // the serving registry (built from step 20) must carry it unchanged
     val traj = spark.read.parquet(TrainingData.ensureClfTrajectory(spark, sf))
     val steps = traj.select("step").distinct().collect()
       .map(_.getLong(0)).sorted
@@ -2861,12 +2862,15 @@ class EngineSpec extends AnyFunSuite {
     val w20 = traj.filter(col("step") === 20L)
       .select("bucket", "wb").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val (tf, n) = TrainingData.qualityClfTf(spark, sf)
+    val fresh = TrainingData.trainQualityClf(tf, n).zipWithIndex
+      .map { case (v, b) => b.toLong -> v }.toMap
+    assert(w20 == fresh, "final snapshot must equal a fresh training run")
     val reg = spark.read.parquet(TrainingData.ensureClfWeights(spark, sf))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(w20 == reg, "final snapshot must equal the serving registry")
+    assert(reg == w20, "the serving registry must carry the final snapshot")
     val rows = TrainingData.defs("x157_cartography")(spark, sf).collect()
     assert(rows.nonEmpty)
-    val (tf, _) = TrainingData.qualityClfTf(spark, sf)
     val nDocs = tf.select("doc_id").distinct().count()
     assert(rows.map(_.getAs[Long]("n_docs")).sum == nDocs,
       "regions must partition every doc exactly once")

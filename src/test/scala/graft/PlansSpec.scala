@@ -498,7 +498,7 @@ class PlansSpec extends AnyFunSuite {
       val q = graft.queries.TrainingData.defs(name)(spark, sf)
       q.count()
       val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains("winnow2_"),
+      assert(plan.contains("winnow_v2_"),
         s"$name must scan the staged fingerprint store:\n$plan")
     }
   }
