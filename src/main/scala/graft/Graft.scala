@@ -5,10 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** One-call onboarding for a session that wasn't started with
   * `spark.sql.extensions=graft.GraftExtensions` (notebooks, tests,
   * existing apps): registers the engine's SQL functions
-  * (`cosine_sim`, `repair_encoding`), the sort-free TopKPerGroup
-  * planner strategy, and — when a data directory is given — the
-  * table views, so both the DataFrame API and reference-style
-  * `spark.sql` text work immediately. Idempotent.
+  * (`cosine_sim`, `repair_encoding`, `md5_hash32`, `word_shingles`),
+  * the sort-free TopKPerGroup planner strategy, and — when a data
+  * directory is given — the table views, so both the DataFrame API
+  * and reference-style `spark.sql` text work immediately. Idempotent.
   */
 object Graft {
 
@@ -16,6 +16,7 @@ object Graft {
   def init(spark: SparkSession): Unit = {
     graft.functions.VectorExpressions.register(spark)
     graft.functions.EncodingRepair.register(spark)
+    graft.functions.HashExpressions.register(spark)
     org.apache.spark.sql.GraftBridge.ensureStrategy(spark, graft.plans.TopKStrategy)
   }
 

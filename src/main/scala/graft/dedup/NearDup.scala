@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.HashExpressions
 import graft.text.TextFunctions._
 
 /** The near-duplicate detection stack as a reusable library facade —
@@ -28,17 +29,14 @@ import graft.text.TextFunctions._
   */
 object NearDup {
 
-  /** 32-bit value from 8 hex chars of md5(c) starting at `start`
-    * (1-based) — the ONE positional hex parse every md5-derived hash
-    * in the engine builds on (cross-engine oracle contract: the
-    * DuckDB mirrors parse the same positions the same way). */
-  private[graft] def md5Hash32At(c: Column, start: Int): Column = {
-    val hex = substring(md5(c), start, 8)
-    (0 until 8).map { i =>
-      (instr(lit("0123456789abcdef"), substring(hex, i + 1, 1)) - 1)
-        .cast("long") * lit(1L << (4 * (7 - i)))
-    }.reduce(_ + _)
-  }
+  /** 32-bit value of the 8 hex chars of md5(c) starting at `start`
+    * (1-based) — the ONE md5-derived hash every other hash in the
+    * engine builds on (cross-engine oracle contract: the DuckDB
+    * mirrors parse the same hex positions of the same digest). One
+    * digest per row, read from its nibbles
+    * ([[graft.functions.Md5Hash32]]). */
+  private[graft] def md5Hash32At(c: Column, start: Int): Column =
+    HashExpressions.md5Hash32(c, start)
 
   /** 32-bit md5-prefix hash of a string column. */
   private[graft] def md5Hash32(c: Column): Column = md5Hash32At(c, 1)
@@ -123,21 +121,18 @@ object NearDup {
 
   /** Per-doc MinHash signature table: (doc_id, shs, n, h0..h{k-1}) —
     * the shared signature builder behind [[minhashLshPairs]] and the
-    * persisted [[saveSignatureStore]]. Per-row array folds only, no
-    * shuffle. */
+    * persisted [[saveSignatureStore]]. Per-row kernels only, no
+    * shuffle: the k slots come from one [[graft.functions.MinHashMins]]
+    * pass over the shingle hashes (NULL slots for a doc with no
+    * shingle). */
   private def sigTable(docs: DataFrame, numHashes: Int,
-      shingleN: Int): DataFrame = {
-    val params = minhashParams(numHashes)
-    val hcols = params.zipWithIndex.map { case ((a, b), j) =>
-      array_min(transform(col("hs"),
-        h => (h * lit(a) + lit(b)) % lit(minhashPrime))).as(s"h$j")
-    }
+      shingleN: Int): DataFrame =
     docs
-      .select(col("doc_id"), wsTokens(col("text")).as("toks"))
-      .select(col("doc_id"), shinglesOfToks(col("toks"), shingleN).as("shs"))
-      .withColumn("hs", transform(col("shs"), x => md5Hash32(x)))
-      .select(col("doc_id") +: col("shs") +: size(col("shs")).as("n") +: hcols: _*)
-  }
+      .select(col("doc_id"), shingles(col("text"), shingleN).as("shs"))
+      .withColumn("mins", HashExpressions.minhashMins(
+        transform(col("shs"), x => md5Hash32(x)), minhashParams(numHashes), minhashPrime))
+      .select(col("doc_id") +: col("shs") +: size(col("shs")).as("n") +:
+        (0 until numHashes).map(j => col("mins")(j).as(s"h$j")): _*)
 
   /** Explode a signature table to its LSH band rows (doc_id,
     * [carry...,] band, key). `carry` columns ride through for callers
@@ -414,13 +409,9 @@ object NearDup {
       shingleN: Int = 3): DataFrame = {
     import scala.jdk.CollectionConverters._
     val params = minhashParams(numHashes)
-    // Base hash in a flat codegen'd Project, NOT a per-row array
-    // fold: inside a higher-order-function lambda the 8 hex-digit
-    // parses of md5Hash32 each re-evaluate the md5 (interpreted, no
-    // common-subexpression elimination) — measured 20× slower than
-    // this explode + codegen-CSE shape on the same corpus. The
-    // explode stays row-local; the shuffle is still only the
-    // map-side-combined |sources|×k partial mins.
+    // One base hash per exploded shingle, then k plain `min`
+    // aggregates: the explode stays row-local and the shuffle is only
+    // the map-side-combined |sources|×k partial mins.
     val hcols = params.zipWithIndex.map { case ((a, b), j) =>
       min((col("h") * lit(a) + lit(b)) % lit(minhashPrime)).as(s"h$j")
     }

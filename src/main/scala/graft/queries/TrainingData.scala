@@ -226,15 +226,9 @@ object TrainingData {
       spread(s, corpusWithDupes(s, d).filter(col("doc_id") % 1000000 < 200)))
       .orderBy(col("id_a"), col("id_b"))
 
-  /** 16-bit hash of a token from its md5 prefix — portable across
-    * engines (md5 is identical; hex parsed positionally). */
-  private def md5Hash16(c: Column): Column = {
-    val hex = substring(md5(c), 1, 4)
-    (0 until 4).map { i =>
-      (instr(lit("0123456789abcdef"), substring(hex, i + 1, 1)) - 1) *
-        lit(1 << (4 * (3 - i)))
-    }.reduce(_ + _)
-  }
+  /** 16-bit hash of a token: the first 4 hex digits of its md5 —
+    * portable across engines (the oracle parses the same digits). */
+  private def md5Hash16(c: Column): Column = shiftright(md5Hash32(c), 16)
 
   /** X3: SimHash signatures (16-bit): per-bit ±1 votes over distinct
     * tokens, sign → bit. Same computation expressed in the oracle SQL. */
@@ -255,7 +249,7 @@ object TrainingData {
   }
 
   /** 32-bit token hash from the md5 prefix (delegates to the one
-    * positional hex parse, [[graft.dedup.NearDup.md5Hash32At]]). */
+    * md5-derived hash, [[graft.dedup.NearDup.md5Hash32At]]). */
   private def md5Hash32(c: Column): Column =
     graft.dedup.NearDup.md5Hash32(c)
 
@@ -8532,9 +8526,9 @@ object TrainingData {
     * token position i (i ≥ 4) iff the 32-bit md5 hash of the 4-token
     * window ending at i is ≡ 0 (mod 16) — expected chunk ≈ 16
     * tokens; the final chunk always closes at the last token. All
-    * row-local array expressions over a PROJECTED token array (the
-    * allShinglesOfToks re-evaluation rule); only (doc, chunk-md5,
-    * length) rows leave the scan. */
+    * row-local array expressions over a PROJECTED token array (a
+    * lambda re-evaluates an inline token expression at every
+    * reference); only (doc, chunk-md5, length) rows leave the scan. */
   private[graft] def cdcChunkRows(docs: DataFrame): DataFrame = {
     val withToks = docs
       .select(col("doc_id"), wsTokens(col("text")).as("toks"))

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.functions.HashExpressions
 
 /** Text-analysis primitives for large-scale training-data pipelines:
   * tokenization, quality scoring, language-ID heuristics, document
@@ -26,33 +27,18 @@ object TextFunctions {
   def distinctTokens(text: Column): Column = array_distinct(wsTokens(text))
 
   /** Word n-grams WITHOUT dedup (one entry per occurrence) — the
-    * repetition-analysis counterpart of [[shingles]]. `toks` should be
-    * a projected token-array column, not an inline `wsTokens(text)`:
-    * every reference to the argument expression re-evaluates it per
-    * element, so an inline regex split turns O(tokens) references
-    * into O(tokens) splits per row. Projecting the array first makes
-    * it a bound attribute, evaluated once per row (CollapseProject
-    * keeps multi-referenced non-cheap projections separate). */
+    * repetition-analysis counterpart of [[shingles]]. One native
+    * kernel ([[graft.functions.WordShingles]]) that reads `toks` once
+    * per row, so an inline `wsTokens(text)` argument costs one split. */
   def allShinglesOfToks(toks: Column, n: Int): Column =
-    filter(
-      transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
-        i => when(i + (n - 1) < size(toks),
-          concat_ws(" ", (0 until n).map(k => element_at(toks, i + k + 1)): _*))),
-      c => c.isNotNull)
+    HashExpressions.wordShingles(toks, n, distinct = false)
 
-  /** Distinct word n-grams from a projected token-array column. */
+  /** Distinct word n-grams (first occurrence, in order) of a token-array column. */
   def shinglesOfToks(toks: Column, n: Int): Column =
-    array_distinct(allShinglesOfToks(toks, n))
+    HashExpressions.wordShingles(toks, n, distinct = true)
 
   /** Word n-gram shingles (n consecutive tokens joined by space). */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = wsTokens(text)
-    array_distinct(filter(
-      transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
-        i => when(i + (n - 1) < size(toks),
-          concat_ws(" ", (0 until n).map(k => element_at(toks, i + k + 1)): _*))),
-      c => c.isNotNull))
-  }
+  def shingles(text: Column, n: Int): Column = shinglesOfToks(wsTokens(text), n)
 
   /** Stopword ratio over whitespace tokens (literal list → broadcast-free). */
   def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {

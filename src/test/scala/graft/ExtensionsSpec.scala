@@ -86,6 +86,25 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(row.getDouble(1) == again.getDouble(1))
   }
 
+  test("md5_hash32 and word_shingles evaluate in SQL text after Graft.init") {
+    val spark = TestSpark.spark
+    Graft.init(spark)
+    val hex = "%032x".format(BigInt(1,
+      java.security.MessageDigest.getInstance("MD5").digest("abc".getBytes("UTF-8"))))
+    val r = spark.sql("""
+      SELECT md5_hash32('abc') AS h1, md5_hash32('abc', 9) AS h9,
+        md5_hash32(CAST(NULL AS STRING)) AS hnull,
+        word_shingles(split('a b a b', ' '), 2) AS sh,
+        word_shingles(split('a b a b', ' '), 2, true) AS shd,
+        word_shingles(CAST(NULL AS ARRAY<STRING>), 2) AS shnull""").collect()(0)
+    assert(r.getLong(0) == java.lang.Long.parseLong(hex.substring(0, 8), 16))
+    assert(r.getLong(1) == java.lang.Long.parseLong(hex.substring(8, 16), 16))
+    assert(r.isNullAt(2))
+    assert(r.getSeq[String](3) == Seq("a b", "b a", "a b"))
+    assert(r.getSeq[String](4) == Seq("a b", "b a"))
+    assert(r.getSeq[String](5) == Nil)
+  }
+
   test("cosine_sim rejects non-float-array inputs") {
     val spark = TestSpark.spark
     VectorExpressions.register(spark)
